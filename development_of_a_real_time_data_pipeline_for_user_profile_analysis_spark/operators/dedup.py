@@ -16,6 +16,22 @@ Design for 100 TB:
 The n-gram/minhash shingle explosion multiplies rows by ~doc length;
 that's fine because it is map-side only (explode → project → partial
 min-aggregate) and never materializes unaggregated.
+
+Lifetime of Spark intermediates — one rule for every public call: a
+call keeps nothing between calls (no module-level DataFrame, no
+cache-manager entry, no tag on a caller's DataFrame), and its result
+stays valid for as long as the caller holds it.
+- What a call reuses only while it runs is persisted and released in
+  a ``finally`` before it returns.
+- What the returned (lazy) result itself reads is an eager
+  localCheckpoint owned by the result: nothing in the engine frees
+  it, and Spark's ContextCleaner drops its blocks once the result is
+  garbage-collected. A later call can never invalidate it.
+- Checkpoints taken only to truncate lineage inside a call (star
+  rounds, edit-distance relations) are freed by
+  ``_free_checkpoints`` once the next stage is materialized — the
+  only code that knows how: ``DataFrame.unpersist()`` and
+  ``df.rdd.unpersist()`` leave a checkpoint's blocks in place.
 """
 
 from __future__ import annotations
@@ -33,19 +49,27 @@ MINHASH_FUNCS = 8
 LSH_BANDS = 4  # 4 bands x 2 rows
 
 
-# partition-probe memo keyed on (session, analyzed-plan semanticHash,
-# target): the same fixture relation is probed by fan_out on every
-# query invocation, and each probe on a FRESH DataFrame object pays
-# full driver-side planning (r13 measured: df.rdd.getNumPartitions()
-# = 68 ms on a plain filter, 156 ms on the synthetic-dupes union,
-# 326 ms on a join-shaped plan — per call). semanticHash needs only
-# analysis (~3-6x cheaper) and two semantically-equal plans under the
-# same session confs plan the same scan splits, so the memo is safe;
-# a (vanishingly unlikely) hash collision can only mis-size the
-# parallelism floor, never change values. Bounded: cleared wholesale
-# at 2048 entries (a long-lived session's plan population is far
-# smaller; eviction precision is worthless here).
-_FAN_PROBE_CACHE: dict = {}
+def _checkpoint_rdds(df: DataFrame) -> list:
+    """The JVM RDDs behind the local checkpoints `df` reads: a
+    checkpoint is a LogicalRDD leaf of the plan."""
+    seq = df._jdf.queryExecution().logical().collectLeaves()
+    return [
+        leaf.rdd()
+        for leaf in (seq.apply(i) for i in range(seq.length()))
+        if leaf.getClass().getSimpleName() == "LogicalRDD"
+    ]
+
+
+def _free_checkpoints(df: DataFrame, keep: tuple[DataFrame, ...] = ()) -> None:
+    """Free the blocks of every local checkpoint `df` reads, except
+    the ones a `keep` frame reads (the caller's inputs). Only
+    unpersisting the plan's own RDD releases a checkpoint's blocks. A
+    freed checkpoint cannot be recomputed, so call this only once
+    nothing will read `df` again."""
+    kept = {rdd.id() for frame in keep for rdd in _checkpoint_rdds(frame)}
+    for rdd in _checkpoint_rdds(df):
+        if rdd.id() not in kept:
+            rdd.unpersist(False)
 
 
 def fan_out(
@@ -56,7 +80,7 @@ def fan_out(
     micro-batch arrives as 1-3 scan partitions (one small parquet
     file is one split), so every downstream shingle explode and
     string kernel runs on that many cores while the rest of the
-    machine idles — measured r12 at sf0.1: the whole word-shingle
+    machine idles — measured at sf0.1: the whole word-shingle
     derivation ran on ONE core (2.6 s; 0.8 s after the fan-out).
     One round-robin exchange of the small input raises the floor to
     the session's scheduler parallelism; inputs that already carry
@@ -68,35 +92,18 @@ def fan_out(
     `small=True` skips the floor entirely — for request-bounded
     relations (erase folds, micro-batch probes) the per-row work is
     too small to amortize either the exchange or the partition
-    probe itself; r12's bench caught the erase-lifecycle pair paying
-    ~0.3 s of driver-side planning per probe on every fold (VERDICT
-    r12 #1). The probe is memoized per analyzed-plan semanticHash
-    (see _FAN_PROBE_CACHE) and a DataFrame this function has already
-    sized is tagged and never re-probed."""
-    if small or getattr(df, "_eng_fanned_out", False):
+    probe itself (the probe plans the input on the driver: ~0.1-0.3 s
+    per call on a join-shaped plan). The probe is stateless, so a
+    caller that fans out once passes `fan=False` to the shingle
+    helpers it feeds instead of paying for a second probe."""
+    if small:
         return df
-    sess = df.sparkSession
-    want = target or sess.sparkContext.defaultParallelism
+    want = target or df.sparkSession.sparkContext.defaultParallelism
     try:
-        key = (
-            id(sess),
-            df._jdf.queryExecution().analyzed().semanticHash(),
-            want,
-        )
-        have = _FAN_PROBE_CACHE.get(key)
-        if have is None:
-            have = df.rdd.getNumPartitions()
-            if len(_FAN_PROBE_CACHE) > 2048:
-                _FAN_PROBE_CACHE.clear()
-            _FAN_PROBE_CACHE[key] = have
+        have = df.rdd.getNumPartitions()
     except Exception:  # planning-only probe must never fail a query
         return df
-    if have >= want:
-        df._eng_fanned_out = True
-        return df
-    out = df.repartition(want)
-    out._eng_fanned_out = True
-    return out
+    return df if have >= want else df.repartition(want)
 
 
 def with_synthetic_dupes(documents: DataFrame) -> DataFrame:
@@ -320,7 +327,7 @@ def lang_aware_shingles(
     nonws_langs: tuple = NONWS_LANGS,
     fan: bool = True,
 ) -> DataFrame:
-    """Language-keyed shingle table (round-9 ask #7): word n-grams
+    """Language-keyed shingle table: word n-grams
     for whitespace-delimited languages, char n-grams for the
     no-whitespace scripts — the `lang` column (language-ID is an
     upstream tier) picks the tokenizer, so the near-dup funnel stops
@@ -331,14 +338,15 @@ def lang_aware_shingles(
     arise. NULL/unknown lang routes to the WORD partition (the
     `~isin` predicate is NULL for a NULL lang, so without the
     explicit isNull branch such docs fell out of BOTH partitions
-    and silently lost their shingles — same hazard class as the
-    ADVICE r11 cdc_chunk_table medium)."""
+    and silently lost their shingles — the same hazard as a NULL
+    lang in cdc_chunk_table)."""
+    docs = fan_out(docs, small=not fan)  # once, for both partitions
     ws = docs.filter(
         (~F.col("lang").isin(*nonws_langs)) | F.col("lang").isNull()
     )
     nonws = docs.filter(F.col("lang").isin(*nonws_langs))
-    return shingles(ws, n_words, fan=fan).unionByName(
-        char_shingles(nonws, n_chars, fan=fan)
+    return shingles(ws, n_words, fan=False).unionByName(
+        char_shingles(nonws, n_chars, fan=False)
     )
 
 
@@ -707,111 +715,52 @@ def near_dedup_minhash(
 ) -> DataFrame:
     """Full near-dedup pipeline: LSH candidates → exact Jaccard verify
     → confirmed near-duplicate pairs. The verify is CONTENT-ADDRESSED
-    (jaccard_pairs_content_addressed, round 9): exact re-crawl groups
-    emit m² byte-identical candidate pairs that short-circuit on a
-    digest join instead of fanning out shingles — the m²-dup-group
-    blowup measured superlinear on the 30× soak.
+    (jaccard_pairs_content_addressed): exact re-crawl groups emit m²
+    byte-identical candidate pairs that short-circuit on a digest
+    join instead of fanning out shingles — the m²-dup-group blowup
+    measured superlinear on the 30× soak.
 
-    The DEFAULT tokenizer is the language-aware tier (VERDICT r9
-    ask #3): word 3-grams for whitespace scripts, char 6-grams for
-    the no-whitespace partition keyed on the `lang` column — a
-    whitespace funnel sees a de-spaced CJK doc as ONE word and is
+    The DEFAULT tokenizer is the language-aware tier: word 3-grams
+    for whitespace scripts, char 6-grams for the no-whitespace
+    partition keyed on the `lang` column — a whitespace funnel sees
+    a de-spaced CJK doc as ONE word and is
     provably blind to its near-dups (lang_dedup_delta_report
     measures the miss). `tokenizer="whitespace"` is the compat flag
     for the historical word-shingle form; corpora without a `lang`
     column fall back to it (no language tier to key on). Unknown
-    tokenizer values raise (ADVICE r10: a typo like 'lang-aware'
-    must not silently degrade to the mode this tier exists to
-    replace).
+    tokenizer values raise (a typo like 'lang-aware' must not
+    silently degrade to the mode this tier exists to replace).
 
-    Shingle-cache lifecycle (r12 — VERDICT r11 #3, replacing the
-    r10 single-flight contract): each call's persisted shingle
-    table enters a bounded FIFO (_MINHASH_SH_KEEP deep) instead of
-    a single slot, so TWO interleaved funnel calls — the exercised
-    concurrent-driver pattern — both keep their caches live until
-    materialization; entering a call beyond the bound releases only
-    the OLDEST cache (correctness unaffected, that caller
-    recomputes), and session storage stays bounded at
-    _MINHASH_SH_KEEP corpus-sized tables rather than leaking one
-    per call (the r10 bench regression the eager eviction fixed).
-    Deeper fan-out should pass its own pre-persisted `sh` via the
-    lower-level lsh_candidate_pairs /
-    jaccard_pairs_content_addressed composition."""
+    The result is lazy and reads eager checkpoints owned by it (the
+    shingle table here, the candidate and digest tables in the
+    verify; see the module docstring): any number of calls may be
+    constructed before any result is consumed."""
     if tokenizer not in BAND_TOKENIZERS:
         raise ValueError(
             f"unknown tokenizer: {tokenizer!r} "
             f"(expected one of {BAND_TOKENIZERS})"
         )
-    # The shared shingle table executes ~4x across the pipeline
-    # branches (signatures, verify a-side, verify b-side, sizes) and
-    # each execution repeats the distinct SHUFFLE, so it is persisted.
-    # (Round-2 measured the opposite on the then-corpus; re-measured
-    # round 3: 6.8 s → 5.2 s at sf0.1 with the cache. At cluster
-    # scale the shingle table is corpus-sized — MEMORY_AND_DISK
-    # semantics make the cache spill rather than evict the executors.)
-    # Caches beyond the FIFO bound are released here (the
-    # _last_pairs discipline, widened to depth 2 for the concurrent
-    # driver pattern): without ANY release every call leaks a
-    # corpus-sized cache into executor storage for the rest of the
-    # session — the r10 bench caught downstream shingle-heavy queries
-    # paying ~2× once the lang-aware table grew the resident set.
-    while len(_minhash_sh_cache) >= _MINHASH_SH_KEEP:
-        _minhash_sh_cache.pop(0).unpersist()
     # fan out once here so the digest/verify branches over `docs`
     # share the raised parallelism floor with the shingle tiers;
-    # `fan=False` = request-bounded caller (erase folds — VERDICT
-    # r12 #1: the probe + exchange cost ~0.3 s per fold on tiny
-    # member slices and bought nothing)
+    # `fan=False` = request-bounded caller (erase folds: the probe +
+    # exchange cost ~0.3 s per fold on tiny member slices and bought
+    # nothing)
     docs = fan_out(docs, small=not fan)
     lang_aware = tokenizer == "lang_aware" and "lang" in docs.columns
-    # persist (recompute-safe), NOT localCheckpoint: the ckpt form
-    # was A/B'd r12 at 7.5 -> 7.0 s for this query — not worth the
-    # depth-2 FIFO's failure mode (an evicted checkpoint cannot
-    # recompute, so a third interleaved funnel construction would
-    # ERROR the first's un-materialized result instead of slowing
-    # it; the blocked set-overlap pipeline takes the ckpt win
-    # because its gain is 2x, not 7%)
+    # The shingle table is read ~4x (signatures, verify a-side,
+    # verify b-side, sizes), and each inline read repeats its
+    # distinct shuffle. An eager checkpoint (plain blocks, lineage
+    # truncated) also serves the verify's concurrent broadcast builds,
+    # which re-ran the shuffle stage under persist().
     sh = (
-        lang_aware_shingles(docs, fan=fan)
+        lang_aware_shingles(docs, fan=False)
         if lang_aware
-        else shingles(docs, fan=fan)
-    )
-    if fan:
-        sh = sh.persist()
-        _minhash_sh_cache.append(sh)
-    else:
-        # request-bounded caller (erase folds): the shingle table is
-        # request-sized, so an EAGER local checkpoint is cheap and
-        # the ~5 concurrent broadcast builds in the verify read its
-        # blocks instead of each re-running the shingle shuffle
-        # (r13 event-log profile: five ~0.7 s broadcast jobs per
-        # fold). persist() was measured to leave them re-executing
-        # the shuffle stage; blocks ride the request-sized FIFO.
-        while len(_erase_ckpt_cache) >= _ERASE_CKPT_KEEP:
-            _erase_ckpt_cache.pop(0).unpersist()
-        sh = sh.localCheckpoint(eager=True)
-        _erase_ckpt_cache.append(sh)
+        else shingles(docs, fan=False)
+    ).localCheckpoint(eager=True)
     cands = lsh_candidate_pairs(docs, sh=sh)
     return jaccard_pairs_content_addressed(
         docs, cands, sh, jaccard_threshold
     )
-
-
-# bounded FIFO of live shingle caches (oldest evicted first); depth
-# 2 = the exercised concurrency (two interleaved funnel calls)
-_MINHASH_SH_KEEP = 2
-_minhash_sh_cache: list[DataFrame] = []
-
-# bounded FIFO of live shingle LOCAL CHECKPOINTS for the blocked
-# set-overlap pipeline (r12): a released checkpoint cannot be
-# recomputed (lineage truncated), so the depth covers the exercised
-# concurrency (2) plus two construct-ahead calls of slack — a
-# consumer that constructs FOUR more blocked pipelines before
-# materializing a result would fail loudly (job error, never a
-# wrong value); no engine/bench/test path constructs more than two
-# ahead (tests/test_minhash_cache.py pins the semantics)
-_SH_CKPT_KEEP = 4
-_sh_ckpt_cache: list[DataFrame] = []
 
 
 def ngram_jaccard_dupes(
@@ -884,36 +833,23 @@ def _blocked_pair_intersections(
     final threshold would keep): I <= I_rare + min(n_freq_a,
     n_freq_b) bounds any intersection-monotone score from above.
 
-    NB (r12 revision): the shingle table is now materialized ONCE
-    (persist + FIFO release) and every branch reads the cache. The
-    round-1/round-4 A/Bs that measured the persist SLOWER (16.4/8.6 s
-    vs 8.9/5.3 s cold/warm for containment_dupes; ngram_jaccard
-    26.6 s uncached vs 36.8 s persisted at 30x) predate the fan_out
-    above them: the shingle derivation then ran on the input's 1-3
-    scan partitions, so the persist added a single-core fill on top
-    of single-core branches. With the derivation fanned out to the
-    scheduler width the fill costs ~0.8 s where each of the ~6 branch
-    re-derivations cost 2.6 s (r12, sf0.1: blocked-pairs stage 3.9 s
-    plan-shared -> 1.4 s cache-shared). `persist_shingles=False`
-    keeps the old share-the-plan form as the A/B knob.
+    NB: the shingle table is materialized ONCE and every branch reads
+    it. With the derivation fanned out to the scheduler width the
+    fill costs ~0.8 s where each of the ~6 branch re-derivations cost
+    2.6 s (sf0.1: blocked-pairs stage 3.9 s plan-shared -> 1.4 s
+    materialized). `persist_shingles=False` keeps the share-the-plan
+    form as the A/B knob.
     """
     sh = shingles(docs)
     if persist_shingles:  # A/B knob — see NB above and PERF.md soaks
         # localCheckpoint, NOT persist: the InMemoryRelation columnar
-        # cache was re-measured r12 and is still slower than the
-        # share-the-plan form here (ngram_jaccard 12.4 s cached vs
-        # 7.7 s uncached at sf0.1 — cache build + the optimization
-        # fence it puts under every join), while the eager local
-        # checkpoint (plain deserialized blocks, lineage truncated)
-        # wins: 1.4 s for the blocked stage. FIFO-bounded like the
-        # minhash cache; a released checkpoint cannot recompute, so
-        # the bound is a generous _SH_CKPT_KEEP (consumers
-        # materialize their result before that many further funnel
-        # constructions everywhere in the engine, bench and tests).
-        while len(_sh_ckpt_cache) >= _SH_CKPT_KEEP:
-            _sh_ckpt_cache.pop(0).unpersist()
+        # cache is slower than the share-the-plan form here
+        # (ngram_jaccard 12.4 s cached vs 7.7 s uncached at sf0.1 —
+        # cache build + the optimization fence it puts under every
+        # join), while the eager local checkpoint (plain deserialized
+        # blocks, lineage truncated) wins: 1.4 s for the blocked
+        # stage. The checkpoint is owned by the lazy result.
         sh = sh.localCheckpoint(eager=True)
-        _sh_ckpt_cache.append(sh)
     rare = (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -1273,38 +1209,24 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-# the last near_dup_clusters call's final checkpointed edge set —
-# released on the next call (same discipline as temporal._last_cache)
-_last_edges: DataFrame | None = None
-
-
 def near_dup_pairs_checkpointed(
     docs: DataFrame, jaccard_threshold: float = 0.6
 ) -> DataFrame:
-    """The confirmed near-dup pair relation, eagerly checkpointed so
-    MULTIPLE consumers (pair counts, clustering, repair ledgers) share
-    ONE MinHash/LSH/verify execution instead of re-running the whole
-    pipeline per branch — the never-consume-an-expensive-lazy-relation-
-    twice rule. Blocks live until the next call (the _last_edges
-    discipline); pass the result into near_dup_clusters(pairs=...)."""
-    global _last_pairs
-    if _last_pairs is not None:
-        _last_pairs.rdd.unpersist()
-        _last_pairs = None
+    """The confirmed near-dup pair relation, materialized into the
+    result's own eager checkpoint so MULTIPLE consumers (pair counts,
+    clustering, repair ledgers) share ONE MinHash/LSH/verify execution
+    instead of re-running the whole pipeline per branch — the
+    never-consume-an-expensive-lazy-relation-twice rule. Pass the
+    result into near_dup_clusters(pairs=...)."""
     # tokenizer pinned: the cluster family interops with the
     # maintained band/labels artifacts, which band on whitespace
     # shingles — the banding tokenizer is an artifact parameter and
     # must match probe-time discovery (incremental == rebuild)
-    p = (
-        near_dedup_minhash(docs, jaccard_threshold, tokenizer="whitespace")
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
-    _last_pairs = p
-    return p
-
-
-_last_pairs: DataFrame | None = None
+    pairs = near_dedup_minhash(docs, jaccard_threshold, tokenizer="whitespace")
+    try:
+        return pairs.select("doc_a", "doc_b").localCheckpoint(eager=True)
+    finally:
+        _free_checkpoints(pairs, keep=(docs,))
 
 
 def near_dup_clusters(
@@ -1319,66 +1241,56 @@ def near_dup_clusters(
 
     Alternating large-star/small-star (DataFrame-only, O(log² n)
     rounds — near-dup components have tiny diameter so 2-3 rounds in
-    practice). Each round materializes through an EAGER
-    localCheckpoint: a star round references its input four times
-    (neighbor union + min join), so an un-truncated lineage recomputes
-    the parent ~4× per round — geometric blow-up (measured 8.7 s →
-    15.8 s → 279 s per round with persist()-only; flat ~1 s rounds
-    checkpointed). On a cluster the same call sites use reliable
-    checkpoint() to HDFS/object storage. The previous round's
-    checkpoint blocks are released explicitly, so no pileup; the
-    (count, xxhash64-sum) fingerprint on the fresh checkpoint is the
-    convergence test.
+    practice). Each round materializes through a localCheckpoint: a
+    star round references its input four times (neighbor union + min
+    join), so an un-truncated lineage recomputes the parent ~4× per
+    round — geometric blow-up (measured 8.7 s → 15.8 s → 279 s per
+    round with persist()-only; flat ~1 s rounds checkpointed). On a
+    cluster the same call sites use reliable checkpoint() to
+    HDFS/object storage. Each round's predecessor is freed once the
+    round is materialized; the (count, xxhash64-sum) fingerprint on
+    the fresh checkpoint is the convergence test. A caller's `pairs`
+    are copied into the first round, never freed.
     """
-    if pairs is None:
+    own_pairs = pairs is None
+    if own_pairs:
         # whitespace-pinned: labels artifacts fold band-index probe
         # pairs (whitespace-banded) into these clusters — one tokenizer
         pairs = near_dedup_minhash(
             docs, jaccard_threshold, tokenizer="whitespace", fan=fan
-        ).select("doc_a", "doc_b")
-    # when a prebuilt (checkpointed) pair relation is passed in, this
-    # re-checkpoint copies only the tiny pair set — the caller's
-    # blocks stay alive for its own consumers (the in-loop unpersist
-    # below must not release them)
-    return _connected_components(
-        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")),
-        max_iter,
-    )
+        )
+    try:
+        return _connected_components(
+            pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")),
+            max_iter,
+        )
+    finally:
+        if own_pairs:
+            _free_checkpoints(pairs, keep=(docs,))
 
 
 def _connected_components(edge_rel: DataFrame, max_iter: int = 12) -> DataFrame:
     """Alternating large-star/small-star over an (a, b) edge relation
-    → (doc_id, cluster_id = component min). Eager localCheckpoint per
+    → (doc_id, cluster_id = component min). One localCheckpoint per
     round (see near_dup_clusters' docstring for the measured lineage
-    blow-up); the final checkpoint backs the returned DataFrame and is
-    released on the next call through the _last_edges slot."""
+    blow-up); the final round's checkpoint is owned by the returned
+    DataFrame, every earlier one is freed here."""
     import logging
 
-    global _last_edges
-    prev = _last_edges
-    _last_edges = None
-    # LAZY checkpoint + fingerprint-materializes (r13): the eager
+    # LAZY checkpoint, materialized BY the fingerprint job: the eager
     # form ran TWO jobs per round (checkpoint fill, then the
-    # fingerprint aggregate over the blocks); the lazy checkpoint is
-    # materialized BY the fingerprint job itself — same blocks, same
-    # lineage truncation, half the jobs (the erase folds chain ~60
-    # request-sized jobs, so job count IS their wall — VERDICT r12
-    # #1/#3). The previous checkpoint is still released only AFTER
-    # the new edges are materialized: the incremental path's input
-    # labels are backed by exactly those blocks (release-first would
-    # consume a freed checkpoint the truncated lineage cannot
-    # recompute).
+    # fingerprint aggregate over the blocks) — same blocks, same
+    # lineage truncation, half the jobs (erase folds chain many
+    # request-sized jobs, so their job count is their wall time).
     edges = edge_rel.localCheckpoint(eager=False)
     fingerprint = _edge_fingerprint(edges)  # materializes the ckpt
-    if prev is not None:
-        prev.rdd.unpersist()
     rounds = 0
     for _ in range(max_iter):
         new_edges = _small_star(_large_star(edges)).localCheckpoint(
             eager=False
         )
         new_fp = _edge_fingerprint(new_edges)  # materializes
-        edges.rdd.unpersist()  # release the previous round's blocks
+        _free_checkpoints(edges)  # the previous round's blocks
         rounds += 1
         converged = new_fp == fingerprint
         edges, fingerprint = new_edges, new_fp
@@ -1391,7 +1303,6 @@ def _connected_components(edge_rel: DataFrame, max_iter: int = 12) -> DataFrame:
     )
     # converged star graph: every non-root node → component min; add
     # the roots themselves.
-    _last_edges = edges
     labels = edges.select(F.col("a").alias("doc_id"), F.col("b").alias("cluster_id"))
     roots = edges.select(F.col("b").alias("doc_id"), F.col("b").alias("cluster_id"))
     return labels.unionByName(roots).distinct()
@@ -1424,18 +1335,11 @@ def incremental_near_dup_clusters(
     return _connected_components(e1.unionByName(e2), max_iter)
 
 
-_last_labels: DataFrame | None = None
-
 CLUSTER_ERASE_MOD = 4  # deterministic label-erase set (oracle lockstep)
 CLUSTER_ERASE_RESIDUE = 1
 
 
 EDIT_MAX_DIST = 64  # char-edit verify ceiling (oracle lockstep)
-
-# the last edit_distance_dupes call's checkpointed relations (pair
-# binding + distinct-content DP) — released on the next call (the
-# _last_edges/_last_pairs discipline)
-_last_edit_ckpts: list = []
 
 
 def edit_distance_dupes(
@@ -1471,107 +1375,112 @@ def edit_distance_dupes(
     subtree (10× soak: 944 s naive → 156 s keyed-only → 16 s with
     both checkpoints; the checkpoints are pair-relation-sized, 4
     digest columns). The shingle table is persisted through the
-    candidate build exactly as near_dedup_minhash does."""
-    global _last_edit_ckpts
+    candidate build. The result is one more eager checkpoint; the
+    shingle cache and both intermediate checkpoints are released
+    before the call returns."""
     sh = shingles(docs).persist()
-    cands = lsh_candidate_pairs(docs, sh=sh)
-    docs_h = docs.select(
-        "doc_id",
-        F.md5("text").alias("h"),
-        F.length("text").alias("len"),
-    )
-    for prev in _last_edit_ckpts:
-        prev.rdd.unpersist()
-    _last_edit_ckpts = []
-    keyed = (
-        cands.join(
-            docs_h.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("h").alias("ha"),
-                F.col("len").alias("la"),
-            ),
-            "doc_a",
+    held: list[DataFrame] = []  # the two lineage-truncating checkpoints
+    try:
+        cands = lsh_candidate_pairs(docs, sh=sh)
+        docs_h = docs.select(
+            "doc_id",
+            F.md5("text").alias("h"),
+            F.length("text").alias("len"),
         )
-        .join(
-            docs_h.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("h").alias("hb"),
-                F.col("len").alias("lb"),
-            ),
-            "doc_b",
-        )
-        .filter(F.abs(F.col("la") - F.col("lb")) <= max_dist)
-        .select("doc_a", "doc_b", "ha", "hb")
-        .localCheckpoint(eager=True)
-    )
-    _last_edit_ckpts.append(keyed)
-    sh.unpersist()
-    # CONTENT-ADDRESSED verify: the DP runs once per distinct
-    # (content_a, content_b) pair, not per doc pair — in a
-    # re-crawl-heavy corpus an m-way duplicate group contributes m²
-    # candidate pairs but ONE distinct text pair, and the pair
-    # relation shuffles DIGESTS only (texts attach to the distinct
-    # content relation, never to pairs — the 10× soak paid 123 s
-    # shipping 1.8 KB of text per pair before this split). The
-    # explicit-width repartition exists because the DP stage is
-    # CPU-bound, not byte-bound: AQE coalesces shuffles by bytes and
-    # would land every DP on a handful of tasks (measured 271 s on 3
-    # tasks vs wide).
-    sc = docs.sparkSession.sparkContext
-    contents = docs.select(
-        F.md5("text").alias("h"), F.col("text")
-    ).dropDuplicates(["h"])
-    d = F.when(F.col("text_a") == F.col("text_b"), F.lit(0)).otherwise(
-        F.levenshtein(F.col("text_a"), F.col("text_b"), max_dist)
-    )
-    longest = F.greatest(
-        F.length("text_a"), F.length("text_b")
-    ).cast("double")
-    dp = (
-        keyed.select("ha", "hb")
-        .distinct()
-        .join(
-            contents.select(
-                F.col("h").alias("ha"), F.col("text").alias("text_a")
-            ),
-            "ha",
-        )
-        .join(
-            contents.select(
-                F.col("h").alias("hb"), F.col("text").alias("text_b")
-            ),
-            "hb",
-        )
-        .repartition(sc.defaultParallelism, "ha", "hb")
-        .select(
-            "ha",
-            "hb",
-            d.alias("edit_distance"),
-            longest.alias("longest"),
-        )
-        .filter(
-            (F.col("edit_distance") >= 0)
-            & (F.col("edit_distance") <= max_dist)
-        )
-        .localCheckpoint(eager=True)
-    )
-    _last_edit_ckpts.append(dp)
-    return (
-        keyed.join(dp, ["ha", "hb"])
-        .select(
-            "doc_a",
-            "doc_b",
-            F.col("edit_distance").cast("long").alias("edit_distance"),
-            F.floor(
-                (1 - F.col("edit_distance") / F.col("longest"))
-                * 1000000
-                + 0.5
+        keyed = (
+            cands.join(
+                docs_h.select(
+                    F.col("doc_id").alias("doc_a"),
+                    F.col("h").alias("ha"),
+                    F.col("len").alias("la"),
+                ),
+                "doc_a",
             )
-            .cast("long")
-            .alias("sim_ppm"),
+            .join(
+                docs_h.select(
+                    F.col("doc_id").alias("doc_b"),
+                    F.col("h").alias("hb"),
+                    F.col("len").alias("lb"),
+                ),
+                "doc_b",
+            )
+            .filter(F.abs(F.col("la") - F.col("lb")) <= max_dist)
+            .select("doc_a", "doc_b", "ha", "hb")
+            .localCheckpoint(eager=True)
         )
-        .orderBy("doc_a", "doc_b")
-    )
+        held.append(keyed)
+        sh.unpersist()
+        # CONTENT-ADDRESSED verify: the DP runs once per distinct
+        # (content_a, content_b) pair, not per doc pair — in a
+        # re-crawl-heavy corpus an m-way duplicate group contributes m²
+        # candidate pairs but ONE distinct text pair, and the pair
+        # relation shuffles DIGESTS only (texts attach to the distinct
+        # content relation, never to pairs — the 10× soak paid 123 s
+        # shipping 1.8 KB of text per pair before this split). The
+        # explicit-width repartition exists because the DP stage is
+        # CPU-bound, not byte-bound: AQE coalesces shuffles by bytes and
+        # would land every DP on a handful of tasks (measured 271 s on 3
+        # tasks vs wide).
+        sc = docs.sparkSession.sparkContext
+        contents = docs.select(
+            F.md5("text").alias("h"), F.col("text")
+        ).dropDuplicates(["h"])
+        d = F.when(F.col("text_a") == F.col("text_b"), F.lit(0)).otherwise(
+            F.levenshtein(F.col("text_a"), F.col("text_b"), max_dist)
+        )
+        longest = F.greatest(
+            F.length("text_a"), F.length("text_b")
+        ).cast("double")
+        dp = (
+            keyed.select("ha", "hb")
+            .distinct()
+            .join(
+                contents.select(
+                    F.col("h").alias("ha"), F.col("text").alias("text_a")
+                ),
+                "ha",
+            )
+            .join(
+                contents.select(
+                    F.col("h").alias("hb"), F.col("text").alias("text_b")
+                ),
+                "hb",
+            )
+            .repartition(sc.defaultParallelism, "ha", "hb")
+            .select(
+                "ha",
+                "hb",
+                d.alias("edit_distance"),
+                longest.alias("longest"),
+            )
+            .filter(
+                (F.col("edit_distance") >= 0)
+                & (F.col("edit_distance") <= max_dist)
+            )
+            .localCheckpoint(eager=True)
+        )
+        held.append(dp)
+        return (
+            keyed.join(dp, ["ha", "hb"])
+            .select(
+                "doc_a",
+                "doc_b",
+                F.col("edit_distance").cast("long").alias("edit_distance"),
+                F.floor(
+                    (1 - F.col("edit_distance") / F.col("longest"))
+                    * 1000000
+                    + 0.5
+                )
+                .cast("long")
+                .alias("sim_ppm"),
+            )
+            .orderBy("doc_a", "doc_b")
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        sh.unpersist()
+        for ckpt in held:
+            _free_checkpoints(ckpt)
 
 
 def near_dup_pairs_from_band_index(
@@ -1616,27 +1525,6 @@ def near_dup_pairs_from_band_index(
         sh.unpersist()
 
 
-def near_dup_clusters_checkpointed(
-    docs: DataFrame, jaccard_threshold: float = 0.6
-) -> DataFrame:
-    """near_dup_clusters materialized into its OWN eager checkpoint —
-    required whenever the labels are consumed AFTER a later
-    _connected_components call (e.g. cluster_labels_erase's member
-    relabel): the CC loop releases the previous call's final edge
-    checkpoint, and the plain near_dup_clusters result is backed by
-    exactly those blocks. Blocks live until the next call here (the
-    _last_pairs/_last_edges discipline)."""
-    global _last_labels
-    if _last_labels is not None:
-        _last_labels.rdd.unpersist()
-        _last_labels = None
-    lbl = near_dup_clusters(docs, jaccard_threshold).localCheckpoint(
-        eager=True
-    )
-    _last_labels = lbl
-    return lbl
-
-
 def cluster_labels_erase(
     labels: DataFrame,
     corpus_docs: DataFrame,
@@ -1667,26 +1555,22 @@ def cluster_labels_erase(
     proves it). Survivors whose every pair died leave the labels
     entirely, exactly as a rebuild would drop unpaired docs.
 
-    `labels` must be independently materialized (artifact parquet
-    read, or near_dup_clusters_checkpointed) — the relabel's CC call
-    releases the previous CC checkpoint that a plain
-    near_dup_clusters result is backed by."""
-    # materialize the two REQUEST-SIZED relations once (eager ckpt,
-    # bounded FIFO): `ids` and the member slice are each consumed by
-    # several broadcast builds below, and every un-truncated consumer
-    # re-executed the corpus-scan lineage (~0.9 s per broadcast job
-    # at sf0.1, measured r13 event-log profile; at scale each saved
-    # re-execution is a corpus scan). r12 §14 A/B'd the member ckpt
-    # a wash — that predates fan=False removing the probe+exchange;
-    # re-measured r13: ids+member ckpt 6.9 → 5.3 s warm min.
-    while len(_erase_ckpt_cache) >= _ERASE_CKPT_KEEP:
-        _erase_ckpt_cache.pop(0).unpersist()
+    `labels` may be any relation the caller holds: the result reads
+    it lazily, together with the request's id set (an eager
+    checkpoint owned by the result) and the relabeled members' own
+    cluster checkpoint."""
+    # materialize the two REQUEST-SIZED relations once (eager ckpt):
+    # `ids` and the member slice are each consumed by several
+    # broadcast builds below, and every un-truncated consumer
+    # re-executed the corpus-scan lineage (~0.9 s per broadcast job at
+    # sf0.1, from an event-log profile; at scale each saved
+    # re-execution is a corpus scan; ids+member ckpt measured 6.9 →
+    # 5.3 s warm min)
     ids = (
         erase_ids.select("doc_id")
         .distinct()
         .localCheckpoint(eager=True)
     )
-    _erase_ckpt_cache.append(ids)
     affected = (
         labels.join(F.broadcast(ids), "doc_id")
         .select("cluster_id")
@@ -1703,23 +1587,17 @@ def cluster_labels_erase(
     member_docs = corpus_docs.join(
         F.broadcast(survivors), "doc_id", "left_semi"
     ).localCheckpoint(eager=True)
-    _erase_ckpt_cache.append(member_docs)
-    # fan=False: the member slice is request-bounded (Σ touched
-    # cluster sizes) — the parallelism floor's probe + round-robin
-    # exchange cost ~0.3 s per fold here and amortize nothing
-    # (VERDICT r12 #1; the r12 regression's root cause)
-    relabeled = near_dup_clusters(member_docs, jaccard_threshold, fan=False)
+    try:
+        # fan=False: the member slice is request-bounded (Σ touched
+        # cluster sizes) — the parallelism floor's probe + round-robin
+        # exchange cost ~0.3 s per fold here and amortize nothing
+        relabeled = near_dup_clusters(
+            member_docs, jaccard_threshold, fan=False
+        )
+    finally:
+        # the relabel reads only its own final checkpoint
+        _free_checkpoints(member_docs)
     return untouched.unionByName(relabeled)
-
-
-# bounded FIFO of the erase fold's REQUEST-SIZED checkpoints (the
-# erase-id set, the touched clusters' member slice, and the member
-# shingle table — three per fold): depth 12 = four folds of slack; a
-# caller materializes its fold's result long before four further
-# folds run (streams fold serially), and every entry is
-# request-bounded, never corpus-sized
-_ERASE_CKPT_KEEP = 12
-_erase_ckpt_cache: list[DataFrame] = []
 
 
 # SQL mirror of with_synthetic_dupes MINUS the deterministic cluster
@@ -2943,7 +2821,7 @@ def incremental_near_dups_indexed(
     cost floor is the OUTPUT: one Jaccard per surviving pair).
     Batch banding AND the verify shingles follow the artifact's
     recorded tokenizer (band_index_tokenizer)."""
-    # MEASURED NON-OPTIMIZATION (r11): candidate-doc shingle pruning
+    # MEASURED NON-OPTIMIZATION: candidate-doc shingle pruning
     # (broadcast semi-join on the cands' doc ids, the
     # jaccard_pairs_content_addressed discipline) and the
     # content-addressed verify were both tried here and REJECTED by
@@ -2960,7 +2838,7 @@ def incremental_near_dups_indexed(
     corpus_bands = read_band_index_serving(spark, index_path)
     # batch is micro-batch/request-sized by the probe contract:
     # fan=False skips the parallelism floor's probe + exchange on
-    # every per-batch shingle derivation (VERDICT r12 #1)
+    # every per-batch shingle derivation
     batch_bands = banded_signatures(
         batch, sh=_band_shingles(batch, mode, fan=False)
     ).select(F.col("doc_id").alias("doc_b"), "band_key")
@@ -2973,23 +2851,20 @@ def incremental_near_dups_indexed(
     # The verify consumes the shingle table THREE times (a-side,
     # b-side, per-doc sizes) and Catalyst shares no exchange across
     # the branches, so an inline derivation runs the whole corpus
-    # shingle stage 3× per probe call (r12 profile: the dominant jobs
-    # of every probe-per-micro-batch stream). Materialize it once in
-    # the bounded ckpt FIFO — or, when the caller probes the SAME
-    # static corpus every micro-batch, take its pre-materialized
-    # table (`corpus_sh`, covering exactly `corpus`'s docs with this
-    # artifact's tokenizer; corpus/batch doc_ids must be disjoint —
-    # per-doc shingle rows may not appear twice) and derive only the
-    # batch-sized remainder per call.
+    # shingle stage 3× per probe call (the dominant jobs of every
+    # probe-per-micro-batch stream in a job profile). Materialize it
+    # once in an eager checkpoint owned by the lazy result — or, when the
+    # caller probes the SAME static corpus every micro-batch, take its
+    # pre-materialized table (`corpus_sh`, covering exactly `corpus`'s
+    # docs with this artifact's tokenizer; corpus/batch doc_ids must
+    # be disjoint — per-doc shingle rows may not appear twice) and
+    # derive only the batch-sized remainder per call.
     if corpus_sh is not None:
         sh = corpus_sh.unionByName(
             _band_shingles(batch, mode, fan=False)
         )
     else:
-        while len(_sh_ckpt_cache) >= _SH_CKPT_KEEP:
-            _sh_ckpt_cache.pop(0).unpersist()
         sh = _band_shingles(both, mode).localCheckpoint(eager=True)
-        _sh_ckpt_cache.append(sh)
     verified = ngram_jaccard_pairs(both, cands, sh=sh)
     return verified.filter(F.col("jaccard") >= jaccard_threshold)
 

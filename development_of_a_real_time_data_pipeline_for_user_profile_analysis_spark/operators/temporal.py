@@ -26,11 +26,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# The last rollup's materialized finer-grain partials. Unpersisted on
-# the next call so repeated invocations (bench loops, oracle sweeps)
-# don't accumulate cached blocks — same discipline as
-# plans/dashboard.refresh().
-_last_cache: DataFrame | None = None
+def minute_partials(events: DataFrame) -> DataFrame:
+    """The finest grain: per-minute event count and value sum."""
+    return events.groupBy(
+        F.date_trunc("minute", "ts").alias("bucket_start")
+    ).agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum("value").alias("sum_value"),
+    )
 
 
 def _reagg(finer: DataFrame, grain: str) -> DataFrame:
@@ -55,20 +58,15 @@ def hypertable_rollup(events: DataFrame, materialize: bool = True) -> DataFrame:
     plan's hour/day branches read the cached partials (the
     continuous-aggregate dataflow); with ``False`` the cascade is
     still expressed but Catalyst recomputes the minute aggregate per
-    branch — use only for plan inspection.
+    branch — use only for plan inspection. The cache is the
+    materialized aggregate the caller asked for, so the caller owns
+    it: Spark's cache manager keys it by plan (a repeated call over
+    the same events reuses the one entry), and
+    ``minute_partials(events).unpersist()`` releases it.
     """
-    global _last_cache
-    minute = events.groupBy(
-        F.date_trunc("minute", "ts").alias("bucket_start")
-    ).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum("value").alias("sum_value"),
-    )
+    minute = minute_partials(events)
     if materialize:
-        if _last_cache is not None:
-            _last_cache.unpersist()
         minute = minute.persist()
-        _last_cache = minute
     hour = _reagg(minute, "hour")
     day = _reagg(minute, "day")
     out = (
@@ -105,12 +103,7 @@ def gapfill_minutes(events: DataFrame) -> DataFrame:
             F.sequence(F.col("t0"), F.col("t1"), F.expr("INTERVAL 1 MINUTE"))
         ).alias("bucket_start")
     )
-    minute = events.groupBy(
-        F.date_trunc("minute", "ts").alias("bucket_start")
-    ).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum("value").alias("sum_value"),
-    )
+    minute = minute_partials(events)
     return grid.join(minute, "bucket_start", "left").select(
         "bucket_start",
         F.coalesce(F.col("n_events"), F.lit(0)).cast("long").alias("n_events"),
@@ -186,21 +179,12 @@ def rollup_incremental_refresh(events: DataFrame, late_mod: int = 23) -> DataFra
     """
     late = events.filter(F.col("event_id") % late_mod == 0)
     base = events.filter(F.col("event_id") % late_mod != 0)
-
-    def minute_rollup(src: DataFrame) -> DataFrame:
-        return src.groupBy(
-            F.date_trunc("minute", "ts").alias("bucket_start")
-        ).agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("sum_value"),
-        )
-
-    standing = minute_rollup(base)
+    standing = minute_partials(base)
     dirty = late.select(
         F.date_trunc("minute", "ts").alias("bucket_start")
     ).distinct()
     untouched = standing.join(F.broadcast(dirty), "bucket_start", "left_anti")
-    recomputed = minute_rollup(
+    recomputed = minute_partials(
         events.withColumn("bucket_start", F.date_trunc("minute", "ts")).join(
             F.broadcast(dirty), "bucket_start", "left_semi"
         )

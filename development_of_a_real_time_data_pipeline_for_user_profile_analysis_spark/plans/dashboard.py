@@ -24,12 +24,16 @@ def refresh(
     total users, age distribution (ECDF parity form + scalable
     histogram).
 
-    Pass the prior poll's return value as ``previous`` — its cached
-    results are released first, so the dashboard's repeated-poll
-    pattern holds at most one refresh's blocks in the cache."""
-    if previous:
-        for df in previous.values():
-            df.unpersist()
+    Each view comes back as rows held on the driver (a DataFrame over
+    local data), so a poll leaves nothing in Spark's cache manager or
+    block store: the next poll always reads the table as it is then,
+    and no unrelated query over the same table is answered from a
+    poll's views. The views are dashboard-sized by contract — four
+    bounded aggregates plus ``age_ecdf``, one row per profile, which
+    is for dashboard-sized tables only (``age_histogram`` is its
+    scalable form). ``previous`` is accepted and ignored: a poll holds
+    nothing for the next one to release."""
+    spark = profiles.sparkSession
     profiles.persist()
     try:
         views = {
@@ -39,9 +43,9 @@ def refresh(
             "age_ecdf": aggregates.age_ecdf(profiles),
             "age_histogram": aggregates.age_histogram(profiles),
         }
-        # materialize while the input is pinned
-        for df in views.values():
-            df.persist().count()
-        return views
+        return {
+            name: spark.createDataFrame(view.toPandas(), view.schema)
+            for name, view in views.items()
+        }
     finally:
         profiles.unpersist()

@@ -2138,9 +2138,7 @@ def q_cluster_erase_update(spark, sf_dir):
     the labels) and bridge members of 3-clusters (survivor pair
     relabels to its new min)."""
     dupes = _dupes_df(spark, sf_dir)
-    # the maintained artifact from the build-once cache — a parquet
-    # read IS the required independent materialization (the erase's
-    # CC call can't release blocks a parquet scan depends on)
+    # the maintained artifact from the build-once cache
     lab = _labels_dir_cached(sf_dir, "labelsdupes", lambda: dupes)
     labels = _rpp(spark, f"{lab}/labels")
     erase = dupes.filter(
@@ -4397,11 +4395,6 @@ def q_embedding_near_dupes(spark, sf_dir):
     return dedup.embedding_near_dupes(_t(spark, sf_dir, "embeddings"))
 
 
-# last curation call's checkpointed dedup intermediate (released on
-# the next call)
-_curation_ckpt = None
-
-
 @query(
     "curation_pipeline",
     _with_dupes(
@@ -4441,21 +4434,16 @@ def q_curation_pipeline(spark, sf_dir):
     stage references it across several plan branches (shingles,
     sizes, verify) and would otherwise recompute the digest-groupBy
     semi join per branch (~20% of query time at sf0.1; in deployment
-    this intermediate is a materialized table anyway). The previous
-    call's checkpoint is released here, same discipline as
-    temporal._last_cache."""
+    this intermediate is a materialized table anyway). The result
+    reads the checkpoint and owns it, as the dedup operators' results
+    own theirs."""
     from pyspark.sql import functions as F
 
-    global _curation_ckpt
-    if _curation_ckpt is not None:
-        _curation_ckpt.rdd.unpersist()
-        _curation_ckpt = None
     # fixture includes the planted de-spaced CJK docs: the curation
     # near-dedup stage runs on the funnel's DEFAULT lang-aware
-    # tokenizer (VERDICT r9 ask #3) and must catch them
+    # tokenizer and must catch them
     d = dedup.with_cjk_docs(_dupes_df(spark, sf_dir))
     step1 = dedup.exact_dedup(d).localCheckpoint(eager=False)
-    _curation_ckpt = step1
     pairs = dedup.near_dedup_minhash(step1, jaccard_threshold=0.6)
     losers = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
     step2 = step1.join(losers, "doc_id", "left_anti")

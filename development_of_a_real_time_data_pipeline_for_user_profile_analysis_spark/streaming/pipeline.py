@@ -1296,16 +1296,14 @@ def run_near_dup_monitor_stream(
     from ..operators import dedup
 
     # the probed corpus is STATIC across the stream — shingle it once
-    # (eager ckpt in the bounded FIFO) instead of 3× per micro-batch
-    # inside every probe's verify (r12; see incremental_near_dups_
-    # indexed's corpus_sh contract: batch doc_ids are disjoint from
-    # the corpus here — the monitor admits NEW ids by construction)
-    while len(dedup._sh_ckpt_cache) >= dedup._SH_CKPT_KEEP:
-        dedup._sh_ckpt_cache.pop(0).unpersist()
+    # (an eager ckpt owned by the gate closure, so it lives as long as
+    # the stream) instead of 3× per micro-batch inside every probe's
+    # verify (see incremental_near_dups_indexed's corpus_sh contract:
+    # batch doc_ids are disjoint from the corpus here — the monitor
+    # admits NEW ids by construction)
     corpus_sh = dedup._band_shingles(
         corpus, dedup.band_index_tokenizer(band_index_path)
     ).localCheckpoint(eager=True)
-    dedup._sh_ckpt_cache.append(corpus_sh)
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
         t0 = time.monotonic()
@@ -1504,17 +1502,14 @@ def run_cluster_update_stream(
     from ..operators import dedup
 
     # the seed corpus is STATIC across the stream — shingle it once
-    # (eager ckpt in the bounded FIFO); per micro-batch only the
-    # published doc segments + the batch itself are shingled fresh
-    # (r12; pre-share, every batch's verify re-derived the corpus
-    # shingle stage 3×)
+    # (an eager ckpt owned by the gate closure, so it lives as long as
+    # the stream); per micro-batch only the published doc segments +
+    # the batch itself are shingled fresh (unshared, every batch's
+    # verify re-derived the corpus shingle stage 3×)
     _mode = dedup.band_index_tokenizer(band_index_path)
-    while len(dedup._sh_ckpt_cache) >= dedup._SH_CKPT_KEEP:
-        dedup._sh_ckpt_cache.pop(0).unpersist()
     corpus_sh = dedup._band_shingles(corpus, _mode).localCheckpoint(
         eager=True
     )
-    dedup._sh_ckpt_cache.append(corpus_sh)
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
         t0 = time.monotonic()
@@ -1524,7 +1519,7 @@ def run_cluster_update_stream(
             n = batch_df.count()
             if n:
                 # (1) publish this batch's bands + docs (idempotent;
-                # r12: threading this pair A/B'd a wash — see the
+                # serial: threading this pair A/B'd a wash — see the
                 # decontamination gate note)
                 dedup.band_index_add(
                     spark, band_index_path, batch_df, batch_id

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
@@ -16,7 +17,7 @@ def spark(tmp_path_factory):
     wh = tmp_path_factory.mktemp("warehouse")
     s = get_spark(
         "tests",
-        cpus=8,
+        cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"),
         shuffle_partitions=8,
         extra_conf={"spark.sql.warehouse.dir": str(wh)},
     )

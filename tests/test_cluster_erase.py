@@ -55,7 +55,7 @@ def test_ghost_bridge_splits_cluster(spark):
         [(1, " ".join(C + P)), (2, " ".join(C + P + Q)), (3, " ".join(C + Q))],
     )
 
-    labels = dedup.near_dup_clusters_checkpointed(docs)
+    labels = dedup.near_dup_clusters(docs)
     assert _labels(labels) == {(1, 1), (2, 1), (3, 1)}
 
     erase = spark.createDataFrame([(2,)], "doc_id long")
@@ -78,7 +78,7 @@ def test_partial_split_keeps_surviving_pair(spark):
             (4, " ".join(C + P) + " extra"),  # ~ A (and ~ X) only
         ],
     )
-    labels = dedup.near_dup_clusters_checkpointed(docs)
+    labels = dedup.near_dup_clusters(docs)
     assert {r.cluster_id for r in labels.collect()} == {1}
 
     erase = spark.createDataFrame([(2,)], "doc_id long")
@@ -92,7 +92,7 @@ def test_erase_equals_full_recompute_on_corpus(spark, sf_dir):
     subjects — label-for-label (the registered oracle's property,
     asserted Spark-vs-Spark here so pytest covers it at any SF)."""
     dupes = dedup.with_synthetic_dupes(load_table(spark, sf_dir, "documents"))
-    labels = dedup.near_dup_clusters_checkpointed(dupes)
+    labels = dedup.near_dup_clusters(dupes)
     erase = dupes.filter(
         (F.col("doc_id") < 100000)
         & (
@@ -223,7 +223,7 @@ def test_streaming_erase_matches_batch_and_replays_idempotent(
     streamed = _labels(spark.read.parquet(f"{lab}/labels"))
 
     # == one-shot batch erase of the union
-    batch_labels = dedup.near_dup_clusters_checkpointed(dupes)
+    batch_labels = dedup.near_dup_clusters(dupes)
     expected = _labels(dedup.cluster_labels_erase(batch_labels, dupes, er))
     assert streamed == expected and len(expected) > 0
 

@@ -1341,7 +1341,7 @@ def test_cluster_labels_erase_untouched_pass_is_one_anti_join(spark):
         dedup,
     )
 
-    labels = dedup.near_dup_clusters_checkpointed(docs)
+    labels = dedup.near_dup_clusters(docs)
     erase = spark.createDataFrame([(1,)], "doc_id long")
     plan = (
         dedup.cluster_labels_erase(labels, docs, erase)
